@@ -12,6 +12,16 @@ Scale notes (100 TB design intent):
 - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; AQE
   coalesces down. On a real cluster this would be set ~2-3x total cores.
 - Arrow transfer on: every pandas-UDF boundary is Arrow-batched.
+
+Python workers: :func:`get_spark` starts them through
+``engine/pyworker/pyspark_graft_worker.py`` (``spark.python.worker.module``,
+with that directory alone on the workers' ``PYTHONPATH``; ``engine/``
+itself would shadow stdlib ``io``). The module runs ``pyspark.worker``
+unchanged, but on Python < 3.12 it stops the per-task re-parse of
+``pyspark.zip``'s central directory that ``importlib.invalidate_caches()``
+causes there; an archive that changed on disk is still re-read. On 3.12+ it is a no-op.
+Both confs are builder-time, so a session built elsewhere and handed to
+:func:`tune` (the external driver's) keeps PySpark's default worker.
 """
 
 from __future__ import annotations
@@ -21,6 +31,9 @@ import warnings
 
 from pyspark.sql import SparkSession
 
+# Holds only pyspark_graft_worker.py: the Python workers' extra path entry.
+WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
+
 # Runtime-settable confs (safe to apply to an externally built session).
 RUNTIME_CONF = {
     # Deterministic timestamp semantics vs the DuckDB oracle: fixture
@@ -29,7 +42,9 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # local[32] box: 32 is 1x cores; AQE coalesces small stages further.
+    # Pre-AQE upper bound, fixed at 32 whatever local[N] the session runs
+    # (1x cores on a 32-core box, 8x on a 4-core one); AQE coalesces small
+    # stages further.
     "spark.sql.shuffle.partitions": "32",
     # Runtime bloom-filter semi-join reduction: on a selective build
     # side, the probe-side scan filters rows BEFORE the shuffle — at
@@ -89,6 +104,10 @@ def get_spark(app_name: str = "engine") -> SparkSession:
         # RUNTIME_CONF because it is builder-time, and the external
         # driver's own session is out of scope.
         .config("spark.ui.showConsoleProgress", "false")
+        # Python worker entry point (module docstring): same worker, no
+        # per-task re-read of pyspark.zip on Python < 3.12.
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        .config("spark.executorEnv.PYTHONPATH", WORKER_DIR)
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

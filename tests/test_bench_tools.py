@@ -12,6 +12,9 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
+from tools import warm_time
 from tools.bench_diff import movers, print_diff
 from tools.host_canary import subprocess_verdict
 
@@ -121,3 +124,11 @@ def test_print_diff_surfaces_embedded_canary(tmp_path, capsys):
     out = capsys.readouterr().out
     assert "canary: (none)" in out
     assert "healthy=False warm_healthy=True recorded=2026-08-16T14:39:00Z" in out
+
+
+def test_warm_time_names_a_mistyped_sf_dir(monkeypatch):
+    # a leading arg that is neither a directory nor a key may be a
+    # mistyped sf_dir: the error says so instead of only "unknown key"
+    monkeypatch.setattr("sys.argv", ["warm_time.py", "/no/such/sf0.1", "q_agg_group"])
+    with pytest.raises(SystemExit, match="not an existing directory"):
+        warm_time.main()

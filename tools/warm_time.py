@@ -41,7 +41,11 @@ def main() -> None:
     queries = all_queries()
     unknown = [k for k in keys if k not in queries]
     if unknown:
-        raise SystemExit(f"unknown keys (not in all_queries()): {unknown}")
+        hint = ""
+        if args and args[0] == unknown[0]:
+            hint = (f"; {args[0]!r} is not an existing directory either — "
+                    "if it was meant as sf_dir, check the path")
+        raise SystemExit(f"unknown keys (not in all_queries()): {unknown}{hint}")
     spark = get_spark("warm_time")
     # same untimed lane warmups as bench.py
     queries["q_agg_group"](spark, sf_dir).write.format("noop").mode("overwrite").save()
