@@ -101,24 +101,6 @@ def test_no_driver_window_slot_is_wasted():
     assert not wasted, f"refresh-only keys inside the window ahead of backlog: {wasted}"
 
 
-def test_host_canary_refs_not_stale():
-    """VERDICT r12 task 4: tools/host_canary.py's reference walls are
-    valid only for the plans that produced them (BENCH_FULL_r11-era
-    q_text_tfidf / q_tpch_q5). This pins a source hash of both
-    registered functions: an engine change to either key must refresh
-    the canary refs (re-measure on a healthy box with the canary's own
-    protocol) in the same commit, instead of silently reclassifying
-    host health against walls measured for a different plan."""
-    from tools.host_canary import stale_refs
-
-    stale = stale_refs(all_queries())
-    assert not stale, (
-        f"canary reference keys changed since refs were pinned: {stale} — "
-        "re-measure tools/host_canary._REFS on a HEALTHY host with the "
-        "canary protocol and update _REF_SRC_SHA in the same commit"
-    )
-
-
 def test_oracle_keys_subset_and_aliased():
     qs, os_ = all_queries(), all_oracles()
     assert set(os_) <= set(qs)

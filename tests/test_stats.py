@@ -1718,9 +1718,6 @@ def test_mase_matches_pandas():
 def test_compression_ratio_matches_zlib_exactly():
     import zlib
 
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from engine.registry import all_queries
     from engine.session import get_spark
 
